@@ -47,7 +47,24 @@ CANDIDATE_TAGS = frozenset(
     """body div article main section td blockquote center""".split()
 )
 
-_WS_RUN = re.compile(r"[\t\n\r\f ]+")
+_SPACE_RUN = re.compile("  +")
+
+
+def _normalize_text(raw: str) -> str:
+    """Per line of ``raw``: collapse [\\t\\r\\f ]+ runs to one space, strip,
+    drop empty lines; join with '\\n'.  Works on the whole string with C-level
+    ``str`` operations; a ``[\\t\\r\\f ]+`` regex would match every single
+    space between words, which dominates extraction on long texts."""
+    if "\t" in raw:
+        raw = raw.replace("\t", " ")
+    if "\r" in raw:
+        raw = raw.replace("\r", " ")
+    if "\f" in raw:
+        raw = raw.replace("\f", " ")
+    if "  " in raw:
+        raw = _SPACE_RUN.sub(" ", raw)
+    return "\n".join(filter(None, map(str.strip, raw.split("\n"))))
+
 
 # precomputed two-space indents for the dom printer (depth > 255 falls back
 # to the multiply; real pages nest far shallower)
@@ -157,13 +174,7 @@ def _render_pass(events, target_order):
             if depth_in_target >= 0 and not skip_depth:
                 if depth_in_target > 0 or target_order is None:
                     parts.append(ev[1])
-    raw = "".join(parts)
-    lines = []
-    for line in raw.split("\n"):
-        line = _WS_RUN.sub(" ", line).strip()
-        if line:
-            lines.append(line)
-    return "\n".join(lines)
+    return _normalize_text("".join(parts))
 
 
 def extract_main_text(root) -> str:
@@ -327,13 +338,7 @@ def _render_subtree(el) -> str:
                 if name in BLOCK_TAGS:
                     parts.append("\n")
                 stack.append([node.children, 0, name])
-    raw = "".join(parts)
-    lines = []
-    for line in raw.split("\n"):
-        line = _WS_RUN.sub(" ", line).strip()
-        if line:
-            lines.append(line)
-    return "\n".join(lines)
+    return _normalize_text("".join(parts))
 
 
 def pick_target(candidates):

@@ -2293,11 +2293,15 @@ def encode_apng(w: int, h: int, frames, delays, plays: int = 0) -> bytes:
     return bytes(out)
 
 
+# fixed payload sizes of the chunks decode_apng unpacks (fdAT: a minimum)
+_APNG_CHUNK_LEN = {b"IHDR": 13, b"acTL": 8, b"fcTL": 26, b"fdAT": 4}
+
+
 def decode_apng(blob: bytes):
     """(width, height, plays, [((delay_num, delay_den), plane), ...]) —
     every frame's deflate stream inflates and unfilters for real; CRCs
-    verified; sequence-number gaps, sub-canvas frames, and frame-count
-    mismatches are loud."""
+    verified; sequence-number gaps, sub-canvas frames, frame-count
+    mismatches and truncated or wrong-length chunks are loud."""
     if blob[:8] != _SIG:
         raise ValueError("not a PNG")
     i, n = 8, len(blob)
@@ -2323,10 +2327,16 @@ def decode_apng(blob: bytes):
     while i + 8 <= n:
         clen = struct.unpack(">I", blob[i:i + 4])[0]
         typ = blob[i + 4:i + 8]
+        if i + 12 + clen > n:
+            raise ValueError(f"PNG chunk {typ!r} truncated")
         data = blob[i + 8:i + 8 + clen]
         crc = struct.unpack(">I", blob[i + 8 + clen:i + 12 + clen])[0]
         if zlib.crc32(typ + data) & 0xFFFFFFFF != crc:
             raise ValueError(f"PNG chunk {typ!r} CRC mismatch")
+        want = _APNG_CHUNK_LEN.get(typ)
+        if want is not None and (clen < want if typ == b"fdAT"
+                                 else clen != want):
+            raise ValueError(f"PNG chunk {typ!r} has bad length {clen}")
         if typ == b"IHDR":
             w, h, depth, ctype, _c, _f, inter = struct.unpack(
                 ">IIBBBBB", data)

@@ -14,6 +14,9 @@ def test_bench_smoke():
         SPARK_GRAFT_MULT="1",
         SPARK_GRAFT_RUNS="1",
         SPARK_GRAFT_HEADLINE_ONLY="1",
+        # the scaling pairs (4->16, 8->32 cores) are covered by
+        # test_bench_scaling.py; a smoke run only checks bench.py runs
+        SPARK_GRAFT_SCALING="0",
     )
     out = subprocess.run(
         [sys.executable, "bench.py"], env=env, capture_output=True, text=True,

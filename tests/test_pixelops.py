@@ -367,6 +367,29 @@ def test_apng_subcanvas_frame_is_loud_scope():
         P.decode_apng(bytes(blob))
 
 
+def _shorten_chunk(blob, typ, keep):
+    """Cut chunk ``typ``'s payload to ``keep`` bytes with a valid CRC, so
+    the length check (not the CRC check) is what fires."""
+    at = blob.index(typ)
+    clen = struct.unpack_from(">I", blob, at - 4)[0]
+    return (blob[:at - 4] + _chunk(typ, blob[at + 4:at + 4 + keep])
+            + blob[at + 8 + clen:])
+
+
+def test_apng_short_chunks_are_value_errors():
+    w, h = 4, 3
+    frames = [bytes((x + y + 9 * k) % 251 for y in range(h)
+                    for x in range(w)) for k in range(2)]
+    blob = P.encode_apng(w, h, frames, [(1, 10), (1, 10)])
+    for typ, keep in [(b"fcTL", 12), (b"fcTL", 2), (b"IHDR", 9),
+                      (b"acTL", 4), (b"fdAT", 3)]:
+        with pytest.raises(ValueError, match="length"):
+            P.decode_apng(_shorten_chunk(blob, typ, keep))
+    # a chunk that runs past the end of the blob is loud too
+    with pytest.raises(ValueError, match="truncated"):
+        P.decode_apng(blob[:blob.index(b"fdAT") + 10])
+
+
 def test_apng_synth_axes_live():
     nfs, plays = set(), set()
     for d in range(24):
